@@ -5,8 +5,8 @@
 
 Runs the full parse → enrich → route → fan-out → aggregate pipeline
 (the reference gateway's batch analog, ``/root/reference/main.go`` /
-``services/``) resumably: killed runs restart with ``--resume`` (the
-default) and reprocess only un-committed conversation buckets
+``services/``) resumably: a killed run restarted on the same ``--out``
+reprocesses only un-committed conversation buckets
 (`plans/checkpoint.py` manifest = the ACK queue analog).
 
 Prints ONE JSON summary line on success so wrappers can parse results.
@@ -30,8 +30,6 @@ def main(argv: list[str] | None = None) -> int:
              "flat = single-slice throughput shape (DirectRELP mode)",
     )
     p.add_argument("--buckets", type=int, default=8)
-    p.add_argument("--no-resume", action="store_true",
-                   help="reprocess every bucket even if committed")
     p.add_argument("--run-id", default=None)
     p.add_argument("--fail-after", type=int, default=None,
                    help="inject a failure after N buckets (resume testing)")
@@ -60,7 +58,6 @@ def main(argv: list[str] | None = None) -> int:
             args.input,
             args.out,
             n_buckets=args.buckets,
-            resume=not args.no_resume,
             fail_after=args.fail_after,
             run_id=args.run_id,
         )

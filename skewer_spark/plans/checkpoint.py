@@ -10,18 +10,30 @@ gives effectively-once delivery (dominates the reference's
 at-least-once + ULID dedup).
 
 The manifest is an append-only parquet directory of single-row commits:
-``(run_id, bucket, n_rows, n_pass, wall_ms, committed_at_run)``.
-On Iceberg this would be the snapshot log; the parquet layout keeps the
-identical semantics without the runtime jar.
+``(run_id, bucket, n_rows, n_pass, wall_ms)``.  On Iceberg this would
+be the snapshot log; the parquet layout keeps the identical semantics
+without the runtime jar.
+
+Metadata commits run on the driver, not as Spark jobs — like an
+Iceberg commit, which is a metadata file the driver writes (and like
+the reference's ACK, one key write).  Each commit is one small parquet
+file written with pyarrow under a hidden ``.part-<uuid>.parquet`` name
+in the target directory, then ``os.replace``d to ``part-<uuid>.parquet``
+(the commit point).  Spark and ``pyarrow.dataset`` both skip ``.`` and
+``_`` names, so a crash mid-write leaves nothing visible.  The readers
+below scan the same directories with ``pyarrow.dataset`` on the
+driver; stores whose metadata Spark wrote (``_SUCCESS``, ``.crc``
+siblings) read the same way.  The public ``read_*`` functions still
+return DataFrames for Spark-side joins.
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
 MANIFEST_SCHEMA = T.StructType([
@@ -32,18 +44,74 @@ MANIFEST_SCHEMA = T.StructType([
     T.StructField("wall_ms", T.LongType(), False),
 ])
 
+# Spark SQL type name → pyarrow type factory, for the metadata schemas
+_ARROW_TYPES = {"string": "string", "int": "int32", "bigint": "int64"}
+
+
+def _arrow_schema(schema: T.StructType):
+    import pyarrow as pa
+
+    return pa.schema([
+        pa.field(f.name, getattr(pa, _ARROW_TYPES[f.dataType.simpleString()])(),
+                 f.nullable)
+        for f in schema.fields
+    ])
+
+
+def _append_rows(path: str, schema: T.StructType, rows: list[tuple]) -> None:
+    """Commit ``rows`` as one new parquet file under ``path``, on the
+    driver: written under a hidden temp name, then renamed into view
+    (the rename is the commit point)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    arrow = _arrow_schema(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow.names, r)) for r in rows], schema=arrow
+    )
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, "." + name)
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
+
+
+def _read_rows(path: str, schema: T.StructType, where=None) -> list[Row]:
+    """Every committed row under ``path`` (optionally filtered by a
+    ``pyarrow.dataset`` expression), read on the driver.  Hidden and
+    ``_`` files (temps, ``_SUCCESS``, ``.crc``) are skipped; an
+    unreadable file raises."""
+    import pyarrow.dataset as ds
+
+    table = ds.dataset(path, schema=_arrow_schema(schema),
+                       format="parquet").to_table(filter=where)
+    return [Row(**d) for d in table.to_pylist()]
+
 
 def manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest")
 
 
-def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
+def _manifest_rows(out_dir: str) -> list[Row]:
+    """Manifest rows, or [] iff the manifest dir doesn't exist yet.
+
+    Only the missing-path case means "nothing committed": treating an
+    unreadable manifest as empty would make a resume redo every bucket
+    and append a second manifest row for each, doubling ``rows`` and
+    the snapshot's ``total_rows``."""
     path = manifest_path(out_dir)
-    try:
-        rows = spark.read.schema(MANIFEST_SCHEMA).parquet(path).select("bucket").collect()
-    except Exception:
-        return set()
-    return {r.bucket for r in rows}
+    if not os.path.isdir(path):
+        return []
+    return _read_rows(path, MANIFEST_SCHEMA)
+
+
+def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
+    return {r.bucket for r in _manifest_rows(out_dir)}
+
+
+def committed_rows(spark: SparkSession, out_dir: str) -> int:
+    """Rows delivered by every committed bucket (the table's size)."""
+    return sum(r.n_rows for r in _manifest_rows(out_dir))
 
 
 def commit_bucket(
@@ -55,10 +123,8 @@ def commit_bucket(
     n_pass: int,
     wall_ms: int,
 ) -> None:
-    df = spark.createDataFrame(
-        [(run_id, bucket, n_rows, n_pass, wall_ms)], MANIFEST_SCHEMA
-    )
-    df.coalesce(1).write.mode("append").parquet(manifest_path(out_dir))
+    _append_rows(manifest_path(out_dir), MANIFEST_SCHEMA,
+                 [(run_id, bucket, n_rows, n_pass, wall_ms)])
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -146,16 +212,17 @@ def buckets_asof(
     # is non-empty, so a store whose history is all empty/noop snapshots
     # has no members dir at all — that is "zero visible buckets", not an
     # error (mirrors _read_snapshots_or_empty's missing-path case)
-    if not os.path.isdir(members_path(out_dir)):
+    path = members_path(out_dir)
+    if not os.path.isdir(path):
         return []
-    rows = (
-        read_snapshot_members(spark, out_dir)
-        .filter(F.col("snapshot_id") == snapshot_id)
-        .select("bucket")
-        .collect()
-    )
-    # an empty-store snapshot legitimately has zero members
-    return sorted(r.bucket for r in rows)
+    import pyarrow.dataset as ds
+
+    rows = _read_rows(path, MEMBERS_SCHEMA,
+                      ds.field("snapshot_id") == snapshot_id)
+    # a set, as read_snapshot_members' distinct: a crash-retry may
+    # re-append identical member rows.  An empty-store snapshot
+    # legitimately has zero members
+    return sorted({r.bucket for r in rows})
 
 
 def snapshotted_run_ids(spark: SparkSession, out_dir: str) -> set[str]:
@@ -164,7 +231,7 @@ def snapshotted_run_ids(spark: SparkSession, out_dir: str) -> set[str]:
     return {r.run_id for r in snaps}
 
 
-def _read_snapshots_or_empty(spark: SparkSession, out_dir: str) -> list:
+def _read_snapshots_or_empty(spark: SparkSession, out_dir: str) -> list[Row]:
     """Snapshot rows, or [] iff the snapshot dir doesn't exist yet.
 
     Only the missing-path case maps to "no history" — a corrupted
@@ -173,7 +240,7 @@ def _read_snapshots_or_empty(spark: SparkSession, out_dir: str) -> list:
     path = snapshot_path(out_dir)
     if not os.path.isdir(path):
         return []
-    return read_snapshots(spark, out_dir).collect()
+    return _read_rows(path, SNAPSHOT_SCHEMA)
 
 
 def commit_snapshot(
@@ -195,8 +262,6 @@ def commit_snapshot(
     overrides the append/noop auto-label (compaction passes
     ``"replace"``, Iceberg's rewrite operation).  Returns the new
     snapshot_id."""
-    import pyspark.sql.functions as F
-
     prev = _read_snapshots_or_empty(spark, out_dir)
     if any(r.run_id == run_id for r in prev):
         raise ValueError(
@@ -215,46 +280,27 @@ def commit_snapshot(
     # zero-member noop — the Iceberg analog of snapshotting a table
     # before its first append; missing-path only, a corrupted manifest
     # still raises
-    if os.path.isdir(manifest_path(out_dir)):
-        man = read_manifest(spark, out_dir)
-        members = man.select("bucket", "run_id", "n_rows").collect()
-        stats = man.groupBy().agg(
-            F.sum("n_rows").alias("tot"),
-            F.sum(F.when(F.col("run_id") == run_id, F.col("n_rows"))
-                  .otherwise(F.lit(0))).alias("added"),
-            F.sum(F.when(F.col("run_id") == run_id, F.col("n_pass"))
-                  .otherwise(F.lit(0))).alias("added_pass"),
-            F.sum(F.when(F.col("run_id") == run_id, F.col("wall_ms"))
-                  .otherwise(F.lit(0))).alias("wall"),
-            F.count("*").alias("n_total"),
-            F.sum((F.col("run_id") == run_id).cast("int")).alias("n_mine"),
-        ).collect()[0]
-        n_mine, n_total = int(stats.n_mine or 0), int(stats.n_total or 0)
-        added, added_pass = int(stats.added or 0), int(stats.added_pass or 0)
-        tot, wall = int(stats.tot or 0), int(stats.wall or 0)
-    else:
-        members = []
-        n_mine = n_total = added = added_pass = tot = wall = 0
-    row = [(
+    members = _manifest_rows(out_dir)
+    mine = [m for m in members if m.run_id == run_id]
+    row = (
         snapshot_id, seq, run_id,
         head.snapshot_id if head is not None else None,
-        operation or ("append" if n_mine else "noop"),
-        n_mine, n_total, added, added_pass, tot, wall,
+        operation or ("append" if mine else "noop"),
+        len(mine), len(members),
+        sum(m.n_rows for m in mine), sum(m.n_pass for m in mine),
+        sum(m.n_rows for m in members), sum(m.wall_ms for m in mine),
         int(time.time() * 1000),
-    )]
+    )
     # member list FIRST, snapshot row last: the snapshot row is the
     # commit point (buckets_asof checks it), so a crash between the two
     # writes leaves only an orphaned member list, never a snapshot
     # whose member query comes back empty
     if members:
-        mrows = [
-            (snapshot_id, seq, int(m.bucket), m.run_id, int(m.n_rows))
+        _append_rows(members_path(out_dir), MEMBERS_SCHEMA, [
+            (snapshot_id, seq, m.bucket, m.run_id, m.n_rows)
             for m in members
-        ]
-        spark.createDataFrame(mrows, MEMBERS_SCHEMA).coalesce(1) \
-            .write.mode("append").parquet(members_path(out_dir))
-    spark.createDataFrame(row, SNAPSHOT_SCHEMA).coalesce(1) \
-        .write.mode("append").parquet(snapshot_path(out_dir))
+        ])
+    _append_rows(snapshot_path(out_dir), SNAPSHOT_SCHEMA, [row])
     return snapshot_id
 
 

@@ -18,8 +18,9 @@ Execution model (SURVEY.md §3.1 "Spark trace", §4.2):
    ``persist()`` once → 4 sink writes + aggregate writes (the fan-out
    reads the routed frame once, mirroring ingest-once /
    reference-per-destination, ``store/store.go:1161-1177``) → manifest
-   commit (the ACK).  A killed run leaves un-committed buckets; rerun
-   with ``resume=True`` processes exactly those.
+   commit (the ACK, a driver-side metadata write — no Spark job).  A
+   killed run leaves un-committed buckets; a rerun on the same
+   ``out_dir`` processes exactly those.
 3. **Finalize** — per-bucket partial aggregate tables are summed
    (counts are associative) into the final metric tables.
 
@@ -397,7 +398,6 @@ def run_pipeline(
     input_path: str,
     out_dir: str,
     n_buckets: int = 8,
-    resume: bool = True,
     fail_after: int | None = None,
     run_id: str | None = None,
 ) -> dict:
@@ -421,7 +421,7 @@ def run_pipeline(
     _check_store_encryption(out_dir, secret)
     staged = stage_input(spark, input_path, out_dir, n_buckets,
                          secret=secret)
-    done = ckpt.committed_buckets(spark, out_dir) if resume else set()
+    done = ckpt.committed_buckets(spark, out_dir)
 
     processed = 0
     for b in range(n_buckets):
@@ -437,9 +437,8 @@ def run_pipeline(
 
     finalize_aggregates(spark, out_dir)
     ckpt.commit_snapshot(spark, out_dir, run_id)
-    man = ckpt.read_manifest(spark, out_dir)
-    total = man.agg(F.sum("n_rows")).collect()[0][0]
-    return {"run_id": run_id, "buckets": n_buckets, "rows": int(total or 0)}
+    return {"run_id": run_id, "buckets": n_buckets,
+            "rows": ckpt.committed_rows(spark, out_dir)}
 
 
 _AGG_KEYS = {
